@@ -17,6 +17,7 @@ surface over real Iceberg tables, so the cutover is a constructor swap
   .incremental(spark, since)          ->  spark.read.format("iceberg")
                                                .option("start-snapshot-id", ...)
   .total_rows()/current_snapshot()    ->  the <ident>.snapshots metadata table
+  .total_rows(partition_filter=...)   ->  load(...).count()
 
 Every Spark call is routed through small instance methods, so unit tests
 mock the session and assert the exact calls — the adapter's logic
@@ -258,9 +259,17 @@ class IcebergTable:
             .load(self.identifier)
         )
 
-    def total_rows(self, snapshot: int | None = None) -> int:
+    def total_rows(
+        self,
+        snapshot: int | None = None,
+        partition_filter: dict[str, list[str]] | None = None,
+    ) -> int:
         """total-records from the snapshot summary (manifest metadata,
-        no scan)."""
+        no scan). With a partition_filter, the count of load()'s pruned
+        frame — Iceberg answers it from manifest row counts."""
+        if partition_filter:
+            df = self.load(self.spark, snapshot, partition_filter)
+            return df.count() if df is not None else 0
         if not self._table_exists():
             return 0
         rows = self._sql(

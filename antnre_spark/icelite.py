@@ -20,6 +20,14 @@ history, single writer: sufficient for this pipeline's per-stage commits).
 Manifest-level partition values give Iceberg-style partition pruning: load()
 filters the file list BEFORE Spark ever touches the filesystem.
 
+File layout: a partitioned write emits one file per partition value (the
+twin of Iceberg's ``write.distribution-mode=hash``). _write_files puts an
+AQE REBALANCE on the partition columns ahead of the writer, so every row of
+one partition value reaches one writer task; AQE coalesces small outputs
+and splits a partition larger than the advisory size, so a hot partition
+still writes in parallel. Without it every upstream task opens one file
+per partition it touches (tasks x partitions small files).
+
 When real Iceberg jars exist, each call maps 1:1 onto
 ``spark.read.format("iceberg")`` / ``df.writeTo(...)`` — the facade is the
 only file that changes.
@@ -155,9 +163,11 @@ class IceLite:
         out_dir = os.path.join(self.data_dir, snap_dir)
         tmp_dir = os.path.join(self.data_dir, f".tmp-{snap_dir}")
         shutil.rmtree(tmp_dir, ignore_errors=True)
-        writer = df.write.mode("overwrite")
         if partition_by:
-            writer = writer.partitionBy(*partition_by)
+            df = df.hint("rebalance", *partition_by)
+            writer = df.write.mode("overwrite").partitionBy(*partition_by)
+        else:
+            writer = df.write.mode("overwrite")
         writer.parquet(tmp_dir)
         files: list[dict] = []
         for root, _dirs, names in os.walk(tmp_dir):
@@ -256,10 +266,9 @@ class IceLite:
         and scan cost grows with file count (task-per-file scheduling +
         footer reads) even when total bytes are flat.
 
-        One file per partition comes from hash-repartitioning on the
-        partition columns before the partitioned write: each partition's
-        rows land in exactly one task. Unpartitioned tables compact to a
-        single file. Returns counts; no-op commit is skipped entirely.
+        One file per partition comes from _write_files' rebalance on the
+        partition columns. Unpartitioned tables compact to a single file.
+        Returns counts; no-op commit is skipped entirely.
 
         Caveat (same as Iceberg): an ``incremental()`` reader whose
         ``since_snapshot`` predates the compaction will see the rewritten
@@ -283,14 +292,9 @@ class IceLite:
         target_files = [f for fs in targets.values() for f in fs]
         df = self._read_files(spark, target_files)
         part_cols = sorted({k for p in targets for k, _v in p})
-        if part_cols:
-            df = df.repartition(*[F.col(c) for c in part_cols])
-            snap = parent + 1
-            new_files = self._write_files(df, snap, part_cols)
-        else:
+        if not part_cols:
             df = df.coalesce(1)
-            snap = parent + 1
-            new_files = self._write_files(df, snap, None)
+        new_files = self._write_files(df, parent + 1, part_cols or None)
         kept = [
             f
             for f in live
@@ -356,6 +360,26 @@ class IceLite:
             out = out.unionByName(d, allowMissingColumns=True)
         return out
 
+    def _files(
+        self,
+        snapshot: int | None,
+        partition_filter: dict[str, list[str]] | None,
+    ) -> list[dict]:
+        """Live manifest entries of a snapshot (default: latest), pruned by
+        partition_filter; empty when the table has no snapshot yet."""
+        snap = snapshot if snapshot is not None else self.current_snapshot()
+        if snap is None:
+            return []
+        files = self.manifest(snap)["files"]
+        if partition_filter:
+            wanted = {col: set(vals) for col, vals in partition_filter.items()}
+            files = [
+                f
+                for f in files
+                if all(f["partitions"].get(c) in v for c, v in wanted.items())
+            ]
+        return files
+
     def load(
         self,
         spark: SparkSession,
@@ -364,20 +388,7 @@ class IceLite:
     ) -> DataFrame | None:
         """Read a snapshot (default: latest). partition_filter prunes files
         via manifest partition values — no listing, no footer reads."""
-        snap = snapshot if snapshot is not None else self.current_snapshot()
-        if snap is None:
-            return None
-        files = self.manifest(snap)["files"]
-        if partition_filter:
-            files = [
-                f
-                for f in files
-                if all(
-                    f["partitions"].get(col) in set(vals)
-                    for col, vals in partition_filter.items()
-                )
-            ]
-        return self._read_files(spark, files)
+        return self._read_files(spark, self._files(snapshot, partition_filter))
 
     def incremental(
         self, spark: SparkSession, since_snapshot: int | None
@@ -393,11 +404,14 @@ class IceLite:
             new = [f for f in new if f["path"] not in old_paths]
         return self._read_files(spark, new)
 
-    def total_rows(self, snapshot: int | None = None) -> int:
-        snap = snapshot if snapshot is not None else self.current_snapshot()
-        if snap is None:
-            return 0
-        return self.manifest(snap)["total_rows"]
+    def total_rows(
+        self,
+        snapshot: int | None = None,
+        partition_filter: dict[str, list[str]] | None = None,
+    ) -> int:
+        """Row count from the manifest (parquet-footer counts recorded at
+        commit) — no scan. partition_filter as in load()."""
+        return sum(f["rows"] for f in self._files(snapshot, partition_filter))
 
 
 def with_bucket(df: DataFrame, col: str, n_buckets: int) -> DataFrame:

@@ -215,13 +215,13 @@ def extract_job(
             ment_snap = ment_t.overwrite_partitions(mentions, ["bucket"])
             rel_t.overwrite_partitions(relations, ["bucket"])
 
-            # a bucket can be legitimately empty (no extractable turns) —
-            # IceLite.load returns None then; the marker must still commit
-            # so resume doesn't redo the bucket forever
-            m_df = ment_t.load(spark, partition_filter={"bucket": [str(b)]})
-            r_df = rel_t.load(spark, partition_filter={"bucket": [str(b)]})
-            n_m = m_df.count() if m_df is not None else 0
-            n_r = r_df.count() if r_df is not None else 0
+            # row counts from the commit's manifest, not a re-scan; a
+            # bucket can be legitimately empty (no extractable turns) —
+            # the count is 0 then and the marker must still commit so
+            # resume doesn't redo the bucket forever
+            this_bucket = {"bucket": [str(b)]}
+            n_m = ment_t.total_rows(partition_filter=this_bucket)
+            n_r = rel_t.total_rows(partition_filter=this_bucket)
             markers.commit(
                 stage="extract",
                 partition_key=str(b),
@@ -241,7 +241,8 @@ def extract_job(
 def link_job(spark: SparkSession, cfg: PipelineConfig) -> dict:
     """Entity linking + triple materialization over all extracted buckets."""
     markers = cfg.markers()
-    mentions = cfg.table("mentions").load(spark)
+    ment_t = cfg.table("mentions")
+    mentions = ment_t.load(spark)
     relations = cfg.table("relations").load(spark)
     if mentions is None or relations is None:
         raise RuntimeError("run extract_job first")
@@ -302,7 +303,7 @@ def link_job(spark: SparkSession, cfg: PipelineConfig) -> dict:
             stage="link_materialize",
             partition_key="all",
             snapshot_id=str(tri_snap),
-            input_rows=mentions.count(),
+            input_rows=ment_t.total_rows(),
             output_rows=vert_t.total_rows(),
             triple_count=n_triples,
             model_hash=cfg.model_hash,

@@ -337,18 +337,14 @@ def process_kg_batch(
     reshuffle the compute-bound model UDF ran on 2 of 32 cores and the
     stream read 2.1x the batch wall on identical input. The extra
     exchange is the same one the batch path pays, and it hash-
-    partitions by conv_id so downstream grouping reuses it.
-
-    The companion half of the fix: the EXTRACTED frame is repartitioned
-    back DOWN (max(2, parallelism/8)) before the persist that the four
-    sink writes share. Persisting at the extraction width made every
-    write schedule one task — and emit one parquet file — per
-    extraction partition (measured: 0.3s -> 2.5s per write at 320), so
-    extraction parallelism and write parallelism are decoupled: the UDF
-    runs wide, the small extracted rows cross one cheap round-robin
-    exchange, and the writes scan a handful of persisted partitions.
-    Measured per 50k-turn batch (32 cores): extract 14s/2-way -> 3.5s/
-    320-way; phase-1 total 11.5-15.5s -> 4.2-4.7s.
+    partitions by conv_id so downstream grouping reuses it. The
+    extracted frame is narrowed (max(2, parallelism/8)) before the
+    persist because every one of the four sink writes scans it: at the
+    extraction width each scan schedules 10x parallelism tasks
+    (perfbench stream_kg on a 4-core machine: 309 Spark tasks per
+    micro-batch wide vs 159 narrowed; rows/s median 62.1 vs 64.1 over
+    12 paired runs). The file count no longer depends on it: the writes
+    rebalance to one file per batch_id partition (IceLite._write_files).
 
     Two-phase design:
 
@@ -475,17 +471,15 @@ def process_extraction_batch(
     # cannot release localCheckpoint blocks). extract_turns = fused
     # segmentation+extraction, row-identical to the staged path (r4).
     # partition_for_extraction: file-source micro-batches arrive with one
-    # partition per ~file and would starve the model UDF; the extracted
-    # frame then drops back to a handful of partitions so the two sink
-    # writes don't schedule one task+file per extraction partition (the
-    # r7 stream-gap finding — see process_kg_batch).
+    # partition per ~file and would starve the model UDF (the r7
+    # stream-gap finding — see process_kg_batch).
     parallelism = batch_df.sparkSession.sparkContext.defaultParallelism
     extracted = extract.extract_turns(
         assemble.partition_for_extraction(
             assemble.filter_extractable(batch_df), 10 * parallelism
         ),
         weights_bc, vocab_bc, model_key=model_key,
-    ).repartition(max(2, parallelism // 8)).persist()
+    ).persist()
     try:
         bid = F.lit(batch_id).alias("batch_id")
         ment_t.overwrite_partitions(

@@ -178,6 +178,13 @@ class TestSnapshots:
         with pytest.raises(KeyError):
             t.total_rows(snapshot=8)
 
+    def test_partition_filtered_total_rows_counts_the_pruned_load(self):
+        t, spark = make_table(exists=True, snapshots=((7, 100),))
+        spark.read.table.return_value.filter.return_value.count.return_value = 42
+        assert t.total_rows(partition_filter={"bucket": ["3"]}) == 42
+        spark.read.table.assert_called_once_with(IDENT)
+        t._sql.assert_not_called()  # no snapshot-summary query
+
     def test_empty_table(self):
         t, _ = make_table(exists=False)
         assert t.snapshots() == []

@@ -155,6 +155,13 @@ class TestCacheSweep:
         full_run(spark, transcripts_df, cfg)
         after = spark.sparkContext._jsc.getPersistentRDDs().size()
         assert after == before
+        # the edge table holds exactly one file per (pred, bucket) partition
+        tri = cfg.table("triples")
+        parts = [
+            (f["partitions"]["pred"], f["partitions"]["bucket"])
+            for f in tri.manifest(tri.current_snapshot())["files"]
+        ]
+        assert len(parts) == len(set(parts)) > 1
         # and a resumed re-run (no-op buckets) is just as clean
         full_run(spark, transcripts_df, cfg)
         assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
